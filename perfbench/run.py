@@ -5,8 +5,9 @@ Usage (from the repository root):
 
     python3 perfbench/run.py --workload olap --seed 1 --seconds 20 --trace 0
 
-Builds the engine and the harness from source with sbt (cached under
-.bench_build/ by a hash of the sources), then starts the harness JVM on
+Builds the engine and the harness from source with sbt, snapshots the
+compiled classes under .bench_build/ by a hash of the sources (sbt's own
+target/ dirs hold whatever was compiled last), then starts the harness JVM on
 one workload. Every query run is cold: graft.CacheScope.release() ends it.
 The last line of stdout is one JSON object:
 
@@ -41,10 +42,11 @@ DATA = os.environ.get("SPARK_GRAFT_SF_DIR",
                       os.path.expanduser(os.path.join("~", "testdata", "sf0.1")))
 HEAP = "3g"
 WORKLOADS = ("olap", "iterative", "etl_write")
-# About the warm-pass seconds of a workload on a 4-core box. A run makes
+# About the warm-pass seconds of each workload on a 4-core box. A run makes
 # --seconds / PASS_S timed passes, rounded, so every run of a workload does
-# the same work and has the same number of latency samples.
-PASS_S = 3.5
+# the same work and has the same number of latency samples: at --seconds 10,
+# 4 on olap and etl_write, 3 on iterative.
+PASS_S = {"olap": 2.5, "iterative": 3.5, "etl_write": 2.5}
 JVM_DEADLINE_S = 170
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -103,6 +105,24 @@ def source_hash():
     return h.hexdigest()[:16]
 
 
+def snapshot(cp, stamp):
+    """Copies the class dirs of the checkout on a classpath under
+    .bench_build/classes-<stamp>/ and returns the classpath naming the copies.
+    sbt compiles every commit into the same target/ dirs, so only the copy
+    still holds this source hash's classes after another commit's build."""
+    snap = os.path.join(BUILD, f"classes-{stamp}")
+    shutil.rmtree(snap, ignore_errors=True)
+    entries = []
+    for p in cp.split(os.pathsep):
+        rel = os.path.relpath(p, ROOT)
+        if os.path.isdir(p) and not rel.startswith(".."):
+            copy = os.path.join(snap, rel.replace(os.sep, "_"))
+            shutil.copytree(p, copy)
+            p = copy
+        entries.append(p)
+    return os.pathsep.join(entries)
+
+
 def build():
     """Compile engine + harness once per source hash; returns the classpath."""
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
@@ -112,7 +132,9 @@ def build():
     cp_file = os.path.join(BUILD, f"classpath-{stamp}.txt")
     if os.path.isfile(cp_file):
         with open(cp_file) as f:
-            return f.read().strip(), stamp
+            cp = f.read().strip()
+        if all(os.path.exists(p) for p in cp.split(os.pathsep)):
+            return cp, stamp
     sbt = shutil.which("sbt")
     if sbt is None:
         fail("sbt is not on PATH")
@@ -131,9 +153,12 @@ def build():
         lines = [l.strip() for l in f if l.strip()]
     if rc != 0 or not lines or ".jar" not in lines[-1]:
         fail(f"build failed (rc={rc}); see {log}")
-    with open(cp_file, "w") as f:
-        f.write(lines[-1])
-    return lines[-1], stamp
+    cp = snapshot(lines[-1], stamp)
+    # written last and renamed into place: a cut build leaves no cache entry
+    with open(cp_file + ".part", "w") as f:
+        f.write(cp)
+    os.replace(cp_file + ".part", cp_file)
+    return cp, stamp
 
 
 def git_commit():
@@ -234,7 +259,7 @@ def main():
     out = os.path.join(res_dir, f"{name}.json")
     log = os.path.join(res_dir, f"{name}.log")
     deadline = time.monotonic() + JVM_DEADLINE_S
-    passes = max(1, round(a.seconds / PASS_S))
+    passes = max(1, round(a.seconds / PASS_S[a.workload]))
 
     setup_s, rc = launch(jvm_cmd(cp_arg, run_dir, [
         "--mode", "run", "--workload", a.workload, "--seed", str(a.seed),

@@ -10,6 +10,9 @@ import scala.util.Random
 
 import org.apache.spark.perfbench.Bus
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse => parseJson, render}
 
 import graft.{CacheScope, SparkEntry}
 
@@ -17,9 +20,10 @@ import graft.{CacheScope, SparkEntry}
   * session can take its first query, then (mode `run`) runs one workload
   * and writes its figures as JSON to `--out`:
   *
-  *  1. a JIT-cold pass over the workload (`cold_pass_s`), which also
-  *     checks every result's digest;
-  *  2. one untimed warm-up pass, then `--passes` timed passes; the seed
+  *  1. a JIT-cold pass over the workload (`cold_pass_s`);
+  *  2. [[WarmPasses]] untimed warm-up passes, the first of which also
+  *     checks every result's digest and samples the heap, then `--passes`
+  *     timed passes; the seed
   *     permutes the query order of every pass. With `--trace 1` every
   *     other timed pass runs with the [[Tracer]] registered and yields the
   *     per-layer figures; the rest give the untraced wall time the tracing
@@ -29,6 +33,14 @@ import graft.{CacheScope, SparkEntry}
   * writes each query's result and digest for the oracle check instead
   * (see README.md). */
 object Harness {
+
+  /** Untimed passes between the cold pass and the timed ones. The JIT keeps
+    * compiling long after the cold pass: pass times fall for about three
+    * passes before they level off. With one warm-up pass the timed passes
+    * sat on that slope, and `wall_s` on `iterative` spread by 31% between
+    * runs. A third warm-up pass took the rest of the slope off, a few
+    * percent, at a cost the run budget cannot carry. */
+  val WarmPasses = 2
 
   final case class Opts(workload: String, seed: Long, passes: Int,
       trace: Boolean, data: String, out: String, digests: String,
@@ -96,18 +108,34 @@ object Harness {
   private def jitMs: Long =
     ManagementFactory.getCompilationMXBean.getTotalCompilationTime
 
+  /** Collection time of the harness's own forced GCs, kept out of
+    * `jvm.gc_ms`. */
+  private var forcedGcMs = 0L
+
   /** Heap in use after a full GC, summed over the heap memory pools. */
   private def heapAfterGcMb(): Double = {
+    val gc0 = gcMs
     System.gc()
+    forcedGcMs += gcMs - gc0
     ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
       .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum / 1048576.0
   }
 
-  private def loadDigests(path: String): Map[String, String] =
-    "\"([^\"]+)\"\\s*:\\s*\"([^\"]+)\"".r
-      .findAllMatchIn(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
-      .map(m => m.group(1) -> m.group(2)).toMap
+  private def loadDigests(path: String): Map[String, String] = {
+    implicit val formats: Formats = DefaultFormats
+    parseJson(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
+      .extract[Map[String, String]]
+  }
+
+  /** A JSON number, or null where there is no figure. */
+  private def num(v: Double): JValue =
+    if (v.isNaN || v.isInfinite) JNull else JDouble(v)
+  private def nums(kv: Seq[(String, Double)]): JObject =
+    JObject(kv.map { case (k, v) => k -> num(v) }.toList)
+
+  private def write(path: String, text: String): Unit =
+    Files.write(Paths.get(path), text.getBytes("UTF-8"))
 
   private def run(spark: SparkSession, o: Opts): Int = {
     val queries = Workloads.all(o.workload)
@@ -116,7 +144,7 @@ object Harness {
     val rng = new Random(o.seed)
     val runner = new Runner(spark, o.data, o.tmp)
     val sc = spark.sparkContext
-    val heapMb = mutable.ArrayBuffer(heapAfterGcMb())
+    val heapMb = mutable.ArrayBuffer.empty[Double]
 
     def pass(traced: Boolean,
         check: (String, DataFrame) => Unit = (_, _) => ()): Pass = {
@@ -126,9 +154,10 @@ object Harness {
       Pass((System.nanoTime() - t0) / 1e9, runs, traced,
         o.tmp.map(Runner.du).getOrElse(0L) - tmp0)
     }
-    // The cold pass also checks every result: between exec and release,
-    // outside the timed layers, it digests the frame the builder returned
-    // and samples the heap after a full GC, with the frame's cache alive.
+    // The first warm-up pass checks every result: between exec and release it
+    // digests the frame the builder returned and samples the heap after a
+    // full GC, with the frame's cache alive. The cold and timed passes run
+    // no check and force no GC.
     def verify(q: String, df: DataFrame): Unit = {
       val got = Runner.digest(df)
       heapMb += heapAfterGcMb()
@@ -136,11 +165,9 @@ object Harness {
         throw new IllegalStateException(
           s"digest $got, pinned ${expected.getOrElse(q, "none")}")
     }
-    val cold = pass(traced = false, verify)
-    // The JIT keeps compiling long after the cold pass. One untimed pass
-    // moves the timed ones past the steepest part of its warm-up; without
-    // it they spread by 20% between runs.
-    val warm = pass(traced = false)
+    val cold = pass(traced = false)
+    val warm = pass(traced = false, verify) +:
+      Seq.fill(WarmPasses - 1)(pass(traced = false))
     val tracer = new Tracer
     // traced runs alternate traced and untraced passes, at least one each
     val nPasses = if (o.trace) math.max(2, o.passes) else o.passes
@@ -151,26 +178,27 @@ object Harness {
       finally if (traced) { Bus.drain(sc); sc.removeSparkListener(tracer) }
     }
     heapMb += heapAfterGcMb()
-    val gc = gcMs
+    val gc = gcMs - forcedGcMs
     val jit = jitMs
     val calibEnd = calib()
 
-    val allRuns = (cold +: warm +: passes).flatMap(_.runs)
+    val allRuns = (cold +: warm ++: passes).flatMap(_.runs)
     val errors = allRuns.flatMap(r => r.error.map(e => s"${r.name}: $e"))
     val untraced = passes.filterNot(_.traced)
     val lat = untraced.flatMap(_.runs.map(_.latencyNs / 1e9)).sorted
-    // the highest percentile with at least ten samples beyond it
-    val tailIdx = math.max(0, lat.size - 11)
+    // The highest percentile with at least ten samples beyond it; none
+    // unless it lies above the median, which takes 21 samples.
+    val tailIdx = lat.size - 11
+    val hasTail = lat.size >= 21
     val e2e = Seq(
-      // the cold pass's query spans, without the untimed checks
       "cold_pass_s" -> cold.runs.map(r => r.latencyNs + r.releaseNs).sum / 1e9,
       "wall_s" -> median(untraced.map(_.wall)),
       "lat_p50_s" -> median(lat),
       "heap_peak_mb" -> heapMb.max)
     val also = Seq(
       "fail_frac" -> errors.size.toDouble / allRuns.size,
-      "lat_tail_s" -> lat(tailIdx),
-      "lat_tail_pct" -> 100.0 * (tailIdx + 1) / lat.size,
+      "lat_tail_s" -> (if (hasTail) lat(tailIdx) else Double.NaN),
+      "lat_tail_pct" -> (if (hasTail) 100.0 * (tailIdx + 1) / lat.size else Double.NaN),
       "lat_samples" -> lat.size.toDouble)
     val traced = passes.filter(_.traced)
     val layers =
@@ -181,35 +209,26 @@ object Harness {
         "trace.overhead_s" ->
           (median(traced.map(_.wall)) - median(untraced.map(_.wall))))
 
-    val stamp = Seq(
-      "workload" -> Json.str(o.workload), "seed" -> o.seed.toString,
-      "cores" -> o.cores.toString,
-      "shuffle_partitions" -> Json.str(spark.conf.get("spark.sql.shuffle.partitions")),
-      "heap_max_mb" -> (Runtime.getRuntime.maxMemory / 1048576).toString,
-      "spark" -> Json.str(spark.version),
-      "scala" -> Json.str(scala.util.Properties.versionNumberString),
-      "jdk" -> Json.str(System.getProperty("java.version")),
-      "queries" -> queries.size.toString, "timed_passes" -> nPasses.toString,
-      "pass_walls_s" -> passes.map(p => f"${p.wall}%.3f").mkString("[", ",", "]"),
-      "calib_start_ms" -> f"$calibStart%.3f", "calib_end_ms" -> f"$calibEnd%.3f")
-    val perQuery = allRuns.groupBy(_.name).toSeq.sortBy(_._1).map { case (q, rs) =>
-      def med(f: QueryRun => Long) = median(rs.drop(1).map(f(_) / 1e6))
-      Json.str(q) -> Json.nums(Seq("build_ms" -> med(_.buildNs),
-        "plan_ms" -> med(_.planNs), "exec_ms" -> med(_.execNs),
-        "release_ms" -> med(_.releaseNs), "cold_ms" -> rs.head.latencyNs / 1e6))
-    }
-    val out = Json.obj(Seq(
-      "attempted" -> allRuns.size.toString, "failed" -> errors.size.toString,
-      "e2e" -> Json.nums(e2e), "also" -> Json.nums(also),
-      "per_layer" -> Json.nums(layers), "stamp" -> Json.obj(stamp),
-      "errors" -> errors.map(Json.str).mkString("[", ",", "]"),
-      "per_query" -> Json.obj(perQuery),
-      "traced_queries" -> Layers.perQuery(traced, tracer, o.cores)))
-    Files.write(Paths.get(o.out), out.getBytes("UTF-8"))
+    val stamp =
+      ("workload" -> o.workload) ~ ("seed" -> o.seed) ~ ("cores" -> o.cores) ~
+      ("shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions")) ~
+      ("heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576) ~
+      ("spark" -> spark.version) ~
+      ("scala" -> scala.util.Properties.versionNumberString) ~
+      ("jdk" -> System.getProperty("java.version")) ~
+      ("queries" -> queries.size) ~ ("warm_passes" -> WarmPasses) ~
+      ("timed_passes" -> nPasses) ~
+      ("pass_walls_s" -> passes.map(_.wall)) ~
+      ("calib_start_ms" -> calibStart) ~ ("calib_end_ms" -> calibEnd)
+    write(o.out, compact(render(
+      ("attempted" -> allRuns.size) ~ ("failed" -> errors.size) ~
+      ("e2e" -> nums(e2e)) ~ ("also" -> nums(also)) ~
+      ("per_layer" -> nums(layers)) ~ ("stamp" -> stamp) ~
+      ("errors" -> errors))))
     if (o.trace) {
-      val lines = (runner.spans ++ tracer.allSpans).sortBy(_.startUs).map(_.json)
-      Files.write(Paths.get(o.out.stripSuffix(".json") + ".spans.jsonl"),
-        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      val lines = (runner.spans ++ tracer.allSpans).sortBy(_.startUs)
+        .map(s => compact(render(s.json)))
+      write(o.out.stripSuffix(".json") + ".spans.jsonl", lines.mkString("", "\n", "\n"))
     }
     errors.foreach(e => System.err.println(s"[perfbench] $e"))
     0
@@ -231,9 +250,9 @@ object Harness {
       } finally CacheScope.release()
     }
     val oracle = SparkEntry.oracleSql
-    Files.write(Paths.get(s"${o.pinDir}/oracle_sql.json"), Json.obj(names.flatMap(q =>
-      oracle.get(q).map(sql => Json.str(q) -> Json.str(sql)))).getBytes("UTF-8"))
-    println(Json.obj(digests.map { case (q, d) => Json.str(q) -> Json.str(d) }))
+    write(s"${o.pinDir}/oracle_sql.json",
+      compact(render(JObject(names.flatMap(q => oracle.get(q).map(q -> JString(_))).toList))))
+    println(compact(render(JObject(digests.map { case (q, d) => q -> JString(d) }.toList))))
     0
   }
 }
@@ -241,18 +260,3 @@ object Harness {
 /** One pass: wall seconds, its query runs, whether traced, and how much
   * the run's temp dir grew. */
 final case class Pass(wall: Double, runs: Seq[QueryRun], traced: Boolean, tmpGrowth: Long)
-
-/** Minimal JSON writing; keys arrive already quoted where needed. */
-object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-  def obj(kv: Seq[(String, String)]): String = kv.map { case (k, v) =>
-    (if (k.startsWith("\"")) k else str(k)) + ":" + v
-  }.mkString("{", ",", "}")
-  def nums(kv: Seq[(String, Double)]): String =
-    obj(kv.map { case (k, v) => k -> (if (v.isNaN || v.isInfinite) "null" else v.toString) })
-}

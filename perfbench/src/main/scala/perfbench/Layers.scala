@@ -15,7 +15,7 @@ object Layers {
   }
 
   /** Figures of one query run, keyed by metric name. */
-  def ofRun(t: Tracer, r: QueryRun, cores: Int): Seq[(String, Double)] = {
+  def ofRun(t: Tracer, r: QueryRun): Seq[(String, Double)] = {
     val b = t.layer(r.trace, "build")
     val e = t.layer(r.trace, "exec")
     val all = new LayerCounts
@@ -57,7 +57,7 @@ object Layers {
   /** Per-pass totals, the median over the traced passes. */
   def metrics(passes: Seq[Pass], t: Tracer, cores: Int): Seq[(String, Double)] = {
     val perPass = passes.map { p =>
-      val runs = p.runs.map(ofRun(t, _, cores).toMap)
+      val runs = p.runs.map(ofRun(t, _).toMap)
       def total(k: String) = runs.map(_(k)).sum
       val sums = runs.head.keys.toSeq.filterNot(_ == "io.tmp_growth_bytes")
         .map(k => k -> total(k)).toMap
@@ -70,12 +70,4 @@ object Layers {
     }
     perPass.head.keys.toSeq.sorted.map(k => k -> Harness.median(perPass.map(_(k))))
   }
-
-  /** Each query's figures from the first traced pass, as a JSON object. */
-  def perQuery(passes: Seq[Pass], t: Tracer, cores: Int): String =
-    passes.headOption.map { p =>
-      Json.obj(p.runs.sortBy(_.name).map { r =>
-        Json.str(r.name) -> Json.nums(ofRun(t, r, cores))
-      })
-    }.getOrElse("{}")
 }

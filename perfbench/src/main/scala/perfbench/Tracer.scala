@@ -4,6 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.Success
 import org.apache.spark.scheduler._
+import org.json4s.JsonAST.JObject
+import org.json4s.JsonDSL._
 
 /** Work one layer of one query run did, as Spark reports it. */
 final class LayerCounts {
@@ -36,9 +38,9 @@ final class LayerCounts {
   * a root span. Spans of one query run share `trace`. */
 final case class Span(trace: Long, id: Long, parent: Long, name: String,
     startUs: Long, endUs: Long) {
-  def json: String =
-    s"""{"trace":$trace,"id":$id,"parent":$parent,"name":"$name",""" +
-      s""""start_us":$startUs,"end_us":$endUs}"""
+  def json: JObject =
+    ("trace" -> trace) ~ ("id" -> id) ~ ("parent" -> parent) ~ ("name" -> name) ~
+      ("start_us" -> startUs) ~ ("end_us" -> endUs)
 }
 
 /** Job group the harness sets around each layer call, and its parse. The
